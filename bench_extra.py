@@ -87,10 +87,6 @@ def cmd_substr():
     _time(spark, "substr:windows_hash_only",
           lambda: sd._windows(docs, "doc_id", "text", L)
           .select("id", "pos", F.xxhash64("g").alias("_h")))
-    _time(spark, "substr:phase1_window_hits",
-          lambda: sd._window_hits(
-              sd._windows(docs, "doc_id", "text", L)
-              .withColumn("_h", F.xxhash64("g")), "_h"))
     _time(spark, "substr:hash_groupby_counts",
           lambda: sd._windows(docs, "doc_id", "text", L)
           .select(F.xxhash64("g").alias("_h"))

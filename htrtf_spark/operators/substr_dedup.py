@@ -14,48 +14,34 @@ a fixed-window fingerprint shuffle instead of a monolithic suffix sort:
 1. every document emits its length-L character windows (pos, gram),
    generated in bounded CHUNKS so no per-row array scales with whole-
    document length (a 100 MB whale yields ~1.5k outer chunk rows, each
-   owning <= ``chunk_chars`` positions — never one 10^8-element array);
-2. phase 1 counts occurrences per 8-byte gram fingerprint with ONE
-   map-side-combined groupBy (16 bytes/row shuffled; a fingerprint
-   repeated 10^9 times partially aggregates to ~one row per task — no
-   per-key buffering, no straggler), then joins the repeated classes
-   back onto the window table (AQE broadcasts the class set when it is
-   small — the common corpus — leaving the window table unshuffled).
-   BOILERPLATE ROUTING (``max_gram_freq``, ON by default): classes
-   whose exact count exceeds the cap — license headers, templates,
-   repeated 10^6-10^9 times across a web corpus — would buffer their
-   entire occurrence set inside ONE exact-check window task (the
-   classic straggler); they take the windowless aggregated exact check
-   instead. Output is provably identical with the cap on or off
-   (pytest-asserted), only the plan shape changes;
+   owning <= ``DEFAULT_CHUNK_CHARS`` positions — never one 10^8-element
+   array);
+2. phase 1 counts occurrences per 8-byte xxhash64 gram fingerprint with
+   ONE map-side-combined groupBy (16 bytes/row shuffled, not the wide
+   (id, pos, gram) row; a fingerprint repeated 10^9 times partially
+   aggregates to ~one row per task — no per-key buffering, no
+   straggler), then joins the repeated classes back onto the window
+   table (broadcast when the class set is small — the common corpus —
+   leaving the window table unshuffled). The surviving candidate
+   windows (a few % of positions in the common corpus) take ONE exact
+   check over the real gram: map-side-combined gram counts, joined
+   back. A same-hash different-gram collision is dropped there; false
+   negatives are impossible (equal grams hash equal). Neither phase
+   buffers a per-key occurrence set — both are partial aggregations —
+   so a boilerplate gram repeated 10^6-10^9 times costs what a rare one
+   does and needs no special route (pytest-asserted on an adversarial
+   10^5-occurrence gram);
 3. per document, hit windows whose [pos, pos+L) intervals overlap or
    touch merge into MAXIMAL DISJOINT spans (interval merge: a new span
    starts when pos - previous_pos > L — plain gaps-and-islands on
    consecutive positions would emit OVERLAPPING spans whenever hit
    positions skip fewer than L characters, e.g. hits at 0 and 2).
 
-A naive single-phase plan would shuffle L bytes per input character —
-the wide gram next to every position. ``prefilter_hash=True`` (default)
-keeps the wide rows out of the exchanges: phase 1 aggregates 8-byte
-xxhash64 fingerprints only, and only the surviving candidate windows
-(a few % of positions in the common corpus) are re-checked against the
-real grams; a same-hash different-gram collision is discarded by the
-exact phase (false negatives are impossible — equal grams hash equal).
-``prefilter_hash=False`` counts the real gram directly — collision-
-proof counts, so repeated-class membership alone decides hits with no
-re-check. Output is identical either way (pytest-asserted).
-
 At 100 TB: windows are O(total chars) rows but the plan is narrow map
 stages + map-side-combined aggregations + AQE-sized shuffles — no
 driver state, no per-executor corpus residency, no suffix array that
-must fit one machine. Exact-check window buffering is bounded by
-``max_gram_freq`` rows per key (heavier classes take the windowless
-aggregated check), per-row arrays are bounded by ``chunk_chars``, and
-heavy detection is free: phase 1's exact class counts are the
-detector (the pre-r7 sampled detection pass is gone — its
-``heavy_detect_sample`` knob is retained as an accepted no-op). The
-cap's effect is observable through ``repeated_gram_stats`` (the
-``stop_shingle_stats`` sibling).
+must fit one machine, no window keyed on a gram. The only window is the
+per-document span merge, bounded by the largest document's hit count.
 
 Policy note: ``strip_repeated_spans`` removes EVERY duplicated span,
 including the "first" occurrence — a keep-one-copy variant is
@@ -79,19 +65,12 @@ from pyspark.sql import functions as F
 DEFAULT_MIN_LEN = 50
 
 # Window-generation chunk: one outer row owns at most this many window
-# positions, so the largest per-row array is chunk_chars ints (~512 KB)
-# and the largest carried substring is chunk_chars + L - 1 chars — both
-# constants, regardless of document size. Outer chunk count is
-# doc_len / chunk_chars (a 100 MB whale -> ~1.5k rows), so neither level
-# of the two-level generate scales a per-row allocation with the whale.
+# positions, so the largest per-row array is this many ints (~512 KB)
+# and the largest carried substring is this + L - 1 chars — both
+# constants, regardless of document size. Outer chunk count is doc_len
+# divided by this (a 100 MB whale -> ~1.5k rows), so neither level of
+# the two-level generate scales a per-row allocation with the whale.
 DEFAULT_CHUNK_CHARS = 65536
-
-# Occurrence cap above which a fingerprint class is boilerplate: it
-# takes the windowless aggregated exact check instead of the per-key
-# window, bounding window-task buffering to cap rows per key. Counts
-# are exact (phase 1's groupBy), so routing needs no detection pass.
-# Pass max_gram_freq=None to disable explicitly (output identical).
-DEFAULT_MAX_GRAM_FREQ = 100_000
 
 # Repeated-class sets up to this many rows are broadcast for the
 # phase-2 reattach join, keeping the wide window table entirely
@@ -101,11 +80,8 @@ DEFAULT_MAX_GRAM_FREQ = 100_000
 # bytes the single-phase plan would have moved. Sizing counts the
 # BUILT relation, not the raw payload: a BroadcastHashJoin build runs
 # ~50-70 B/row over the 16 B (hash, count) class, so 2M classes is a
-# ~100-150 MB build per executor — heavy but workable; the gram-keyed
-# (no-prefilter) variant carries L-char strings per class, so its
-# bound is lower.
+# ~100-150 MB build per executor — heavy but workable.
 DUP_CLASS_BROADCAST_MAX = 2_000_000
-DUP_GRAM_BROADCAST_MAX = 500_000
 
 
 def _windows(
@@ -163,45 +139,23 @@ def _windows(
     )
 
 
-# Retained knob (r6 compat): detection used to COUNT a 1-in-N position
-# sample in a separate pass; since r7 the counting pass IS phase 1 (an
-# exact map-side-combined groupBy on the 8-byte fingerprint), so
-# detection is exact and free and this knob no longer changes the plan.
-# It is accepted (and validated) so existing callers keep working; its
-# documented contract — output identical for any value — holds
-# trivially.
-DEFAULT_HEAVY_SAMPLE = 64
-
-
-def _exact_hits_small(rows: DataFrame) -> DataFrame:
-    """Exact >= 2 check for the (small) heavy route WITHOUT a window:
-    map-side-combined gram counts, semi-joined back. Hash-collision
-    artifacts occurring once inside a heavy class are dropped here,
-    which is what keeps the cap routing-only. No broadcast hint: with
-    the default cap the distinct heavy grams are few and AQE broadcasts
-    them at runtime; under an adversarially tiny cap (max_gram_freq=1
-    routes EVERY repeated class here) the gram set is the whole
-    repeated vocabulary and a forced broadcast would OOM — the shuffle
-    semi join AQE falls back to is the safe shape."""
+def _exact_hits(rows: DataFrame) -> DataFrame:
+    """Exact >= 2 check over the real gram WITHOUT a window:
+    map-side-combined gram counts, joined back. Drops the windows whose
+    fingerprint class repeated only through a hash collision. An inner
+    join on the unique repeated grams, not a left-semi join: the
+    optimizer pushes a semi join below the fingerprint join that
+    produced ``rows``, which would shuffle EVERY window by gram instead
+    of only the candidates. No broadcast hint: the repeated vocabulary
+    can be large, and the shuffle join AQE falls back to is the safe
+    shape."""
     gcounts = (
         rows.groupBy("g")
         .agg(F.count(F.lit(1)).alias("_gn"))
         .filter(F.col("_gn") >= 2)
         .select("g")
     )
-    return rows.join(gcounts, "g", "left_semi").select("id", "pos")
-
-
-def _window_hits(rows: DataFrame, key: str) -> DataFrame:
-    """Rows of keys occurring >= 2 times, via a per-key window count
-    (one shuffle). Only ever fed key classes bounded by the cap."""
-    return (
-        rows.withColumn(
-            "_n", F.count(F.lit(1)).over(Window.partitionBy(key))
-        )
-        .where(F.col("_n") >= 2)
-        .drop("_n")
-    )
+    return rows.join(gcounts, "g").select("id", "pos")
 
 
 def repeated_substring_spans(
@@ -209,121 +163,50 @@ def repeated_substring_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = DEFAULT_MIN_LEN,
-    prefilter_hash: bool = True,
-    max_gram_freq: int | None = DEFAULT_MAX_GRAM_FREQ,
-    chunk_chars: int = DEFAULT_CHUNK_CHARS,
-    heavy_detect_sample: int = DEFAULT_HEAVY_SAMPLE,
 ) -> DataFrame:
     """Maximal duplicated character spans, as
     (id, span_start, span_end, span_len) with [span_start, span_end)
     0-based character offsets into the document text. See module
     docstring for semantics and the scale shape.
 
-    ``max_gram_freq`` routes boilerplate classes around the per-key
-    exact-check windows (output provably identical; bounds window
-    buffering to the cap — routing reads phase 1's exact counts, no
-    detection pass). ``heavy_detect_sample`` is retained for
-    compatibility and no longer changes the plan (its contract — output
-    identical for any value — holds trivially). ``chunk_chars`` bounds
-    per-row generated arrays (output independent of it; tune only if L
-    approaches the chunk size).
-
-    NOT fully lazy (same as the pre-r7 detection ``head()``): building
-    the result runs phase 1 eagerly — the class-count job both
-    populates the persisted class set and decides the reattach regime
-    at plan time. The persisted set is registered with
-    ``operators.dedup.release_caches()``; sessions running many dedup
-    jobs should release between runs."""
+    NOT fully lazy: building the result runs phase 1 eagerly — the
+    class-count job both populates the persisted class set and decides
+    the reattach regime at plan time. The persisted set is registered
+    with ``operators.dedup.release_caches()``; sessions running many
+    dedup jobs should release between runs."""
     L = int(min_len)
     if L < 1:
         raise ValueError(f"min_len must be >= 1, got {min_len}")
-    if max_gram_freq is not None and int(max_gram_freq) < 1:
-        raise ValueError(
-            f"max_gram_freq must be >= 1 or None, got {max_gram_freq}"
-        )
-    if int(heavy_detect_sample) < 1:
-        raise ValueError(
-            f"heavy_detect_sample must be >= 1, got {heavy_detect_sample}"
-        )
-    if int(chunk_chars) < 1:
-        raise ValueError(f"chunk_chars must be >= 1, got {chunk_chars}")
+    from htrtf_spark.operators.dedup import _register_cache
     from htrtf_spark.plans.ordering import fan_out
 
     # single-split inputs would serialize the window generation (the
     # most CPU-dense narrow stage in the library) onto one core; at
     # warehouse scale the scan is already parallel and this is a no-op
     docs = fan_out(df, id_col)
-    grams = _windows(docs, id_col, text_col, L, chunk=int(chunk_chars))
+    grams = _windows(docs, id_col, text_col, L)
 
-    if prefilter_hash:
-        # phase 1: EXACT per-fingerprint counts via map-side-combined
-        # groupBy over ONLY the 8-byte hash (16 bytes/row shuffled vs
-        # the full (id, pos, gram) row a window would move — guide
-        # §2.3; a fingerprint repeated 10^9 times partially aggregates
-        # to ~one row per task, so there is no per-key buffering and no
-        # straggler anywhere in this phase). The counts are exact, so
-        # the former sampled heavy-DETECTION pass is subsumed: classes
-        # above the cap are routed by the same ``_n`` the phase already
-        # computed.
-        from htrtf_spark.operators.dedup import _register_cache
-
-        counts = (
-            grams.select(F.xxhash64("g").alias("_h"))
-            .groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= 2)
-        )
-        # reattach: candidate windows are the rows whose fingerprint
-        # class repeats. The class set is cached (tiny — 16 B/class)
-        # and counted ONCE to pick the regime at plan time: broadcast
-        # (the common corpus — a few % duplicated — leaving the wide
-        # window table entirely unshuffled) or, past the bound, a
-        # shuffle join on _h that AQE skew-splits (a window could not
-        # be split this way). Relying on AQE's runtime SMJ→BHJ
-        # conversion instead would materialize the wide shuffle before
-        # converting — the exact cost this phase exists to avoid.
-        dup = _register_cache(counts.persist())
-        small = dup.count() <= DUP_CLASS_BROADCAST_MAX
-        cand = grams.withColumn("_h", F.xxhash64("g")).join(
-            F.broadcast(dup) if small else dup, "_h"
-        )
-        if max_gram_freq is not None:
-            cap = int(max_gram_freq)
-            # light classes (2 <= n <= cap): exact >= 2 re-check over
-            # the REAL gram (collision-proof) — per-key window
-            # buffering is bounded by the cap by construction.
-            light = cand.filter(F.col("_n") <= cap).drop("_h", "_n")
-            # heavy classes (n > cap): boilerplate — exact check
-            # WITHOUT a window (_exact_hits_small: map-side-combined
-            # gram counts + broadcast semi join), so no window task
-            # ever buffers an unbounded occurrence set.
-            heavy = cand.filter(F.col("_n") > cap).drop("_h", "_n")
-            hits = _window_hits(light, "g").select("id", "pos").unionByName(
-                _exact_hits_small(heavy)
-            )
-        else:
-            hits = _window_hits(
-                cand.drop("_h", "_n"), "g"
-            ).select("id", "pos")
-    else:
-        # no hash prefilter: count the REAL gram directly — counts are
-        # collision-proof, so every position of a repeated class is a
-        # hit by definition and no re-check (window OR cap split) is
-        # needed at all; the cap knob is routing-only and the exact
-        # groupBy already has no per-key buffering.
-        from htrtf_spark.operators.dedup import _register_cache
-
-        counts = (
-            grams.groupBy("g")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= 2)
-            .select("g")
-        )
-        dup = _register_cache(counts.persist())
-        small = dup.count() <= DUP_GRAM_BROADCAST_MAX
-        hits = grams.join(
-            F.broadcast(dup) if small else dup, "g", "left_semi"
-        ).select("id", "pos")
+    # phase 1: exact per-fingerprint counts via a map-side-combined
+    # groupBy over ONLY the 8-byte hash (16 bytes/row shuffled)
+    counts = (
+        grams.select(F.xxhash64("g").alias("_h"))
+        .groupBy("_h")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") >= 2)
+    )
+    # reattach: candidate windows are the rows whose fingerprint class
+    # repeats. The class set is cached and counted ONCE to pick the
+    # regime at plan time: broadcast (the common corpus, leaving the
+    # wide window table unshuffled) or, past the bound, a shuffle join
+    # on _h that AQE skew-splits. Relying on AQE's runtime SMJ→BHJ
+    # conversion instead would materialize the wide shuffle before
+    # converting — the exact cost this phase exists to avoid.
+    dup = _register_cache(counts.persist())
+    small = dup.count() <= DUP_CLASS_BROADCAST_MAX
+    cand = grams.withColumn("_h", F.xxhash64("g")).join(
+        F.broadcast(dup) if small else dup, "_h"
+    )
+    hits = _exact_hits(cand.drop("_h", "_n"))
 
     # interval merge, not consecutive-position islands: hit intervals
     # [pos, pos+L) overlap-or-touch exactly when the position gap is
@@ -349,34 +232,6 @@ def repeated_substring_spans(
             "span_end",
             (F.col("span_end") - F.col("span_start")).alias("span_len"),
         )
-    )
-
-
-def repeated_gram_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = DEFAULT_MIN_LEN,
-    max_gram_freq: int = DEFAULT_MAX_GRAM_FREQ,
-    chunk_chars: int = DEFAULT_CHUNK_CHARS,
-) -> DataFrame:
-    """Lineage row for the boilerplate cap (the ``stop_shingle_stats``
-    sibling, operators/dedup.py): (n_grams_distinct, n_heavy_grams,
-    n_heavy_positions, max_freq) — how many gram classes the cap routes
-    around the window and how skewed the gram frequency distribution
-    is. One map-side-combined aggregate over the window table."""
-    grams = _windows(df, id_col, text_col, int(min_len), int(chunk_chars))
-    freq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
-    cap = int(max_gram_freq)
-    return freq.agg(
-        F.count(F.lit(1)).alias("n_grams_distinct"),
-        F.sum(F.when(F.col("n") > cap, 1).otherwise(0)).alias(
-            "n_heavy_grams"
-        ),
-        F.sum(F.when(F.col("n") > cap, F.col("n")).otherwise(0)).alias(
-            "n_heavy_positions"
-        ),
-        F.max("n").alias("max_freq"),
     )
 
 

@@ -123,36 +123,32 @@ _STRIP_L = 50  # same knob as q96/q97 (queries/dedup.py _SUBSTR_L)
 
 def training_corpus_stripped(
     docs, id_col: str = "doc_id", text_col: str = "text",
-    min_len: int = _STRIP_L, persist: bool = True,
+    min_len: int = _STRIP_L,
 ):
     """documents(id, text) → extraction → strip repeated substrings →
     quality filter → keep-first dedup. Output adds ``removed_chars``
     (per-document strip audit) to the ``training_corpus`` schema.
 
     Plan shape: the extraction is narrow but feeds MULTIPLE consumers
-    — the substring operator's heavy-gram detection pass, its window
-    chain, and the strip join — so by default the extracted corpus is
-    persisted (MEMORY_AND_DISK, registered with the dedup cache
-    registry for release_caches()) instead of re-running the
-    mapInPandas stage once per consumer (review r6; the memory notes'
-    recompute-heavy-narrow-transform antipattern). At warehouse scale
-    the production form materializes extraction to a table first
-    (jobs/build_training_set.py) and ``persist=False`` composes over
-    that; quality is a narrow projection over the stripped text; dedup
-    is one fingerprint-window shuffle."""
+    — the substring operator's phase-1 count job, its exact check, and
+    the strip join — so the extracted corpus is always persisted
+    (MEMORY_AND_DISK, registered with the dedup cache registry for
+    release_caches()) instead of re-running the mapInPandas stage once
+    per consumer. Quality is a narrow projection over the stripped
+    text; dedup is one fingerprint-window shuffle."""
+    from pyspark import StorageLevel
+
     from htrtf_spark.operators.dedup import _register_cache
     from htrtf_spark.operators.substr_dedup import (
         repeated_substring_spans,
         strip_repeated_spans,
     )
 
-    cleaned = _extract_clean(docs, id_col, text_col)
-    if persist:
-        from pyspark import StorageLevel
-
-        cleaned = _register_cache(
-            cleaned.persist(StorageLevel.MEMORY_AND_DISK)
+    cleaned = _register_cache(
+        _extract_clean(docs, id_col, text_col).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
+    )
     spans = repeated_substring_spans(
         cleaned, "_id", "clean_text", min_len=min_len
     )

@@ -253,8 +253,10 @@ def test_substr_phase1_is_groupby_with_broadcast_reattach(spark):
     """Substring-dedup phase 1 must aggregate 8-byte fingerprints (a
     map-side-combined groupBy — no per-key window buffering on the full
     window table) and reattach the bounded-small repeated-class set via
-    a plan-time broadcast join; the only windows left are the
-    candidate-only exact check and the span merge."""
+    a plan-time broadcast join; the exact check is an aggregation too,
+    so the only window left is the per-document span merge."""
+    import re
+
     from htrtf_spark.operators.dedup import release_caches
     from htrtf_spark.operators.substr_dedup import repeated_substring_spans
 
@@ -266,12 +268,15 @@ def test_substr_phase1_is_groupby_with_broadcast_reattach(spark):
         spans = repeated_substring_spans(df, "doc_id", "text", min_len=20)
         plan = spans._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan  # reattach regime, not SMJ
-        # phase 1 must NOT window the full gram table on the hash:
-        # every Window node left partitions on the real gram (exact
-        # check) or on the doc id (span merge)
-        for ln in plan.splitlines():
-            if "Window" in ln and "windowspecdefinition" in ln:
-                assert "_h#" not in ln, ln
+        # every Window node partitions on the doc id (span merge)
+        keys = re.findall(r"windowspecdefinition\((\w+)#", plan)
+        assert keys and set(keys) == {"id"}, keys
+        # the exact check joins on the gram ABOVE the fingerprint join,
+        # so only candidate windows reach it (a semi join pushed below
+        # the fingerprint join would shuffle every window by gram)
+        logical = spans._jdf.queryExecution().optimizedPlan().toString()
+        joins = re.findall(r"Join \w+, \((\w+)#", logical)
+        assert joins.index("g") < joins.index("_h"), joins
         assert spans.count() > 0  # and it still finds the boilerplate
     finally:
         release_caches()

@@ -14,14 +14,16 @@ from htrtf_spark.queries.extraction_queries import _Q34_INPUT
 
 
 def _q34_sql_with_seeded_input(con, sql: str, tmp_path) -> str:
-    """The q34 oracle reads the parquet its Spark query materializes to
-    a fixed /tmp path (the SQL text is frozen). On a clean /tmp the
-    artifact does not exist yet, so the parse-only test would fail on
-    I/O, not SQL. Seed an EMPTY parquet with the input schema into a
-    TEST-LOCAL temp dir and point this test's COPY of the SQL at it —
-    the real artifact path is never touched, so a later oracle-only run
-    elsewhere still fails loudly if the Spark side has not produced it
-    (same pattern as test_sql_oracle_parity's path rewrite)."""
+    """The q34-family oracles (every SQL that reads ``_Q34_INPUT``) read
+    the parquet q34's Spark query materializes to a fixed /tmp path
+    (the SQL text is frozen). On a clean /tmp, or when this test runs
+    before that query, the artifact does not exist, so the parse-only
+    test would fail on I/O, not SQL. Seed an EMPTY parquet with the
+    input schema into a TEST-LOCAL temp dir and point this test's COPY
+    of the SQL at it — the real artifact path is never touched, so a
+    later oracle-only run elsewhere still fails loudly if the Spark
+    side has not produced it (same pattern as test_sql_oracle_parity's
+    path rewrite)."""
     seed_dir = os.path.join(str(tmp_path), "q34_seed.parquet")
     os.makedirs(seed_dir, exist_ok=True)
     con.execute(
@@ -30,7 +32,6 @@ def _q34_sql_with_seeded_input(con, sql: str, tmp_path) -> str:
         "CAST(NULL AS VARCHAR) AS role, CAST(NULL AS VARCHAR) AS text "
         f"WHERE false) TO '{seed_dir}/seed.parquet' (FORMAT PARQUET)"
     )
-    assert _Q34_INPUT in sql
     return sql.replace(_Q34_INPUT, seed_dir)
 
 TABLES = {
@@ -74,6 +75,6 @@ def test_oracle_sql_parses_in_duckdb(name, tmp_path):
     for tbl, ddl in TABLES.items():
         con.execute(f"CREATE TABLE {tbl} ({ddl})")
     sql = oracle_sqls()[name]
-    if name == "q34_extract_synthetic":
+    if _Q34_INPUT in sql:
         sql = _q34_sql_with_seeded_input(con, sql, tmp_path)
     con.execute(sql).fetchall()  # empty tables → just parse/run

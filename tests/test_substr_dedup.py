@@ -1,14 +1,16 @@
 """Exact repeated-substring dedup (operators/substr_dedup.py): planted
-repeats spanning document boundaries, a brute-force oracle, hash
-prefilter equivalence, and apply-side reconstruction."""
+repeats spanning document boundaries, a brute-force oracle, a
+heavy-gram skew fixture, and apply-side reconstruction."""
 
 from __future__ import annotations
 
 import random
+import re
 
 import pytest
 
 from htrtf_spark.operators.substr_dedup import (
+    _windows,
     repeated_substring_spans,
     strip_repeated_spans,
 )
@@ -78,16 +80,6 @@ def test_spans_match_brute_force(spark):
     assert any(d == 2 for d, *_ in got)          # within-doc repeat found
     assert {d for d, *_ in got} >= {0, 1, 4}     # cross-doc boilerplate
     assert not any(d in (3, 5) for d, *_ in got)  # clean/short untouched
-
-
-def test_prefilter_hash_equivalence(spark):
-    docs = _mk_docs()
-    df = spark.createDataFrame(
-        list(docs.items()), "doc_id long, text string"
-    )
-    a = repeated_substring_spans(df, "doc_id", "text", L, prefilter_hash=True)
-    b = repeated_substring_spans(df, "doc_id", "text", L, prefilter_hash=False)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_strip_repeated_spans_reconstruction(spark):
@@ -191,113 +183,65 @@ def test_near_offset_hits_merge_into_one_disjoint_span(spark):
 
 
 def test_heavy_gram_cap_output_identity(spark):
-    """VERDICT r5 #1: grams above max_gram_freq route around the
-    per-key window (groupBy count + broadcast/inline membership) —
-    output must be IDENTICAL with the cap on, off, tiny, and under
-    both prefilter regimes, on an adversarial corpus where one gram
-    dominates (boilerplate repeated far above the cap)."""
+    """Skew fixture: one L-char boilerplate gram occurs >= 10^5 times
+    across documents and a rare gram exactly twice. Every candidate
+    window takes the same windowless exact check, so the output must
+    equal the brute-force oracle and no Window may be keyed on the gram
+    or its fingerprint (a per-gram window would buffer the whole
+    boilerplate occurrence set in one task)."""
+    from htrtf_spark.operators.dedup import release_caches
+
     Lx = 12
     boiler = "BOILERPLATE!"  # exactly L chars -> one gram per planting
-    assert len(boiler) == Lx
+    rare = "QQ RARE 7531"  # also L chars, disjoint from the soup alphabet
+    assert len(boiler) == len(rare) == Lx
     rng = random.Random(11)
     alpha = "abcdefghijklmnopqrstuvwxyz"
-    docs = {}
-    # 40 docs, each planting the boilerplate gram 5x (200 occurrences)
-    # amid unique soup; a second, rarer repeat sits just under the cap
-    rare = "qqrareREPEAT"  # also L chars
-    assert len(rare) == Lx
-    for d in range(40):
-        soup = "".join(rng.choice(alpha) for _ in range(30))
-        docs[d] = (boiler + soup[:7] + boiler) * 2 + soup + boiler
-    docs[100] = "unique " + "".join(rng.choice(alpha) for _ in range(50))
-    docs[101] = rare + " filler " + rare  # 2 occurrences: a hit, not heavy
+    docs = {
+        d: "".join(
+            boiler + "".join(rng.choice(alpha) for _ in range(3))
+            for _ in range(100)
+        )
+        for d in range(1000)
+    }
+    docs[2000] = "unique " + "".join(rng.choice(alpha) for _ in range(50))
+    docs[2001] = "<" + rare + ">"
+    docs[2002] = "{" + rare + "}"
+    assert sum(t.count(boiler) for t in docs.values()) >= 10**5
+    assert sum(t.count(rare) for t in docs.values()) == 2
     df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-
-    want = sorted(
-        map(tuple, repeated_substring_spans(
-            df, "doc_id", "text", Lx, prefilter_hash=False,
-            max_gram_freq=None,
-        ).collect())
-    )
-    assert want == sorted(_brute_spans(docs, Lx))
-    for prefilter in (True, False):
-        for cap in (1, 3, 100_000):
-            # sample=1: exact detection; 2: sampled (flags fire on this
-            # corpus); 10**6: detection misses everything (pure window
-            # path) — output must be identical in EVERY regime, because
-            # detection is routing-only
-            for sample in (1, 2, 10**6):
-                got = sorted(
-                    map(tuple, repeated_substring_spans(
-                        df, "doc_id", "text", Lx,
-                        prefilter_hash=prefilter, max_gram_freq=cap,
-                        heavy_detect_sample=sample,
-                    ).collect())
-                )
-                assert got == want, (
-                    f"prefilter={prefilter} cap={cap} sample={sample}"
-                )
+    try:
+        spans = repeated_substring_spans(df, "doc_id", "text", Lx)
+        got = set(map(tuple, spans.collect()))
+        plan = spans._jdf.queryExecution().executedPlan().toString()
+    finally:
+        release_caches()
+    want = _brute_spans(docs, Lx)
+    assert got == want
+    assert {(2001, 1, 1 + Lx, Lx), (2002, 1, 1 + Lx, Lx)} <= got
+    keys = set(re.findall(r"windowspecdefinition\((\w+)#", plan))
+    assert keys and not keys & {"g", "_h"}, keys
 
 
 def test_chunked_windows_output_identity(spark):
     """ADVICE r5 (medium): window generation is chunked so no per-row
-    array scales with document length. Output must be independent of
-    chunk_chars, including chunks smaller than L, equal to L, and
-    non-divisible remainders."""
+    array scales with document length. The (id, pos, g) rows must be
+    independent of the chunk size, including chunks smaller than L,
+    equal to L, and non-divisible remainders."""
     docs = _mk_docs()
     df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
     want = sorted(
-        map(tuple, repeated_substring_spans(
-            df, "doc_id", "text", L, chunk_chars=1 << 20
-        ).collect())
+        (d, i, t[i : i + L])
+        for d, t in docs.items()
+        for i in range(len(t) - L + 1)
     )
-    assert want == sorted(_brute_spans(docs, L))
     for chunk in (1, 7, L, L + 1, 64):
-        got = sorted(
-            map(tuple, repeated_substring_spans(
-                df, "doc_id", "text", L, chunk_chars=chunk
-            ).collect())
-        )
-        assert got == want, f"chunk_chars={chunk}"
-
-
-def test_repeated_gram_stats(spark):
-    """Cap observability (the stop_shingle_stats sibling): distinct
-    gram count, heavy count/positions, and max frequency match a
-    brute-force count at a cap that the boilerplate gram exceeds."""
-    from collections import Counter
-
-    from htrtf_spark.operators.substr_dedup import repeated_gram_stats
-
-    Lx = 12
-    docs = {
-        0: "BOILERPLATE!" * 6,               # gram at many offsets
-        1: "BOILERPLATE!" + " unique one",
-        2: "totally different text here....",
-    }
-    counts = Counter(
-        t[i : i + Lx]
-        for t in docs.values()
-        for i in range(len(t) - Lx + 1)
-    )
-    cap = 3
-    df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-    row = repeated_gram_stats(
-        df, "doc_id", "text", min_len=Lx, max_gram_freq=cap
-    ).collect()[0]
-    assert row["n_grams_distinct"] == len(counts)
-    assert row["n_heavy_grams"] == sum(1 for v in counts.values() if v > cap)
-    assert row["n_heavy_positions"] == sum(
-        v for v in counts.values() if v > cap
-    )
-    assert row["max_freq"] == max(counts.values())
+        rows = _windows(df, "doc_id", "text", L, chunk=chunk).collect()
+        got = sorted(map(tuple, rows))
+        assert got == want, f"chunk={chunk}"
 
 
 def test_cap_validation(spark):
     df = spark.createDataFrame([(1, "x" * 60)], "doc_id long, text string")
     with pytest.raises(ValueError):
-        repeated_substring_spans(df, max_gram_freq=0)
-    with pytest.raises(ValueError):
-        repeated_substring_spans(df, chunk_chars=0)
-    with pytest.raises(ValueError):
-        repeated_substring_spans(df, heavy_detect_sample=0)
+        repeated_substring_spans(df, min_len=-1)
